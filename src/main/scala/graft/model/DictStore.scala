@@ -1,8 +1,7 @@
 package graft.model
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,10 +25,10 @@ import org.apache.spark.sql.types._
   * `o_type`/`o_lang` nulls force a null-safe `<=>` join — ids are never
   * null, so the anti-join keeps plain equi-key hash semantics.
   *
-  * Two backends share the machinery, mirroring the string-space pair:
-  * [[DictQuadStore]] (merge-on-write) and [[DictMorStore]] (O(delta)
-  * deltas/tombstones with latest-wins reads — the Iceberg/Hudi trade,
-  * in id space). The dictionary is append-only on both (frozen ids,
+  * The two write policies apply unchanged: [[DictQuadStore]]
+  * ([[MergeOnWrite]]) and [[DictMorStore]] ([[MergeOnRead]] over the
+  * same [[DeltaLog]] as the string store, keyed by ids). The
+  * dictionary is append-only on both (frozen ids,
   * increments sorted after the current range — [[TermDictionary.append]]'s
   * contract), so quads on disk are never rewritten by vocabulary
   * growth; deletes leave their terms behind until the explicit
@@ -40,19 +39,15 @@ import org.apache.spark.sql.types._
   * DictStoreSpec / DictMorStoreSpec parity batteries run the full
   * SPARQL surface on both sides.
   */
-trait DictBackend extends QuadStore {
+trait DictBackend extends PartitionedStore {
   import DictQuadStore.dictSchema
 
   def path: String
-  protected final def quadsPath: String = path + "/quads"
   protected final def dictPath: String = path + "/dict"
-
-  protected def fs =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  protected def empty(schema: StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  protected final lazy val layout: PartitionLayout =
+    new PartitionLayout(spark, path + "/quads")
+  protected final def keys: QuadKeys = QuadKeys.Ids
+  private def fs = layout.fs
 
   /** The dictionary: canonical term key, dense id, decomposed struct
     * fields. Read whole — every consumer (encode, decode, constant
@@ -74,29 +69,30 @@ trait DictBackend extends QuadStore {
     * append → fresh read). */
   def readDict(): DataFrame =
     DictBackend.cachedDict(spark, dictPath) {
-      if (!fs.exists(new Path(dictPath))) empty(dictSchema)
+      if (!fs.exists(new Path(dictPath)))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dictSchema)
       else spark.read.schema(dictSchema).parquet(dictPath)
     }
 
-  /** Encoded statements in the compiler's schema `(graph, s_id, p_id,
-    * o_id)` — three longs plus the partition-pruning graph column,
-    * with set semantics already reconstructed (merge-on-read folds its
-    * latest-wins aggregation UNDER this view, still in id space). */
-  def readEncoded(): DataFrame
+  protected def encode(quads: DataFrame): DataFrame =
+    TermDictionary.encode(quads, readDict().select("term", "id"))
 
-  def readGraphsEncoded(graphs: Seq[String]): DataFrame =
-    readEncoded().where(col("graph").isin(graphs: _*))
-
-  def read(): DataFrame = decodeQuads(readEncoded())
-
-  def readGraphs(graphs: Seq[String]): DataFrame =
-    decodeQuads(readGraphsEncoded(graphs)) // prune BEFORE the decode joins
+  /** The batch is pinned so the dictionary increment and the encode
+    * joins share one computation of it. */
+  protected def withEncoded(batch: DataFrame, insert: Boolean)(
+      write: DataFrame => Unit): Unit = {
+    batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      if (insert) extendDictionary(batch)
+      write(encode(batch))
+    } finally { batch.unpersist(blocking = false); () }
+  }
 
   /** Decoded string-space view (the [[QuadStore]] trait surface): three
     * dictionary joins restore `(s, p, o_value, o_type, o_lang,
     * o_kind)`. Result-consumer path only — the compiler never joins
     * this frame; its patterns run over [[readEncoded]]. */
-  protected def decodeQuads(enc: DataFrame): DataFrame = {
+  protected def decode(enc: DataFrame, extra: Seq[String]): DataFrame = {
     val dict = readDict()
     val sD = dict.select(col("id").as("_s_id"), col("v").as("s"))
     val pD = dict.select(col("id").as("_p_id"), col("v").as("p"))
@@ -106,7 +102,7 @@ trait DictBackend extends QuadStore {
       .join(sD, col("s_id") === col("_s_id"))
       .join(pD, col("p_id") === col("_p_id"))
       .join(oD, col("o_id") === col("_o_id"))
-      .select(GraphStore.schema.fieldNames.map(col).toIndexedSeq: _*)
+      .select(GraphStore.columns ++ extra.map(col): _*)
   }
 
   /** Grow the dictionary by the batch's genuinely new terms: decompose
@@ -187,29 +183,6 @@ trait DictBackend extends QuadStore {
     }
   }
 
-  protected def partitionDir(graph: String): Path =
-    new Path(quadsPath, "graph=" + ExternalCatalogUtils.escapePathName(graph))
-
-  def clearGraph(graph: String): Unit = {
-    val dir = partitionDir(graph)
-    if (fs.exists(dir)) fs.delete(dir, true)
-  }
-
-  def dropGraph(graph: String): Unit = clearGraph(graph)
-
-  def graphNames(): Seq[String] =
-    if (!fs.exists(new Path(quadsPath))) Seq.empty
-    else fs.listStatus(new Path(quadsPath)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("graph="))
-      .map(st => ExternalCatalogUtils.unescapePathName(
-        st.getPath.getName.stripPrefix("graph=")))
-
-  /** Every id any stored row still references — the reachability set
-    * for [[vacuumDictionary]]. Merge-on-read includes TOMBSTONED
-    * history (time travel must keep decoding it); merge-on-write is
-    * just the live quads. One narrow column as `rid`. */
-  protected def referencedIds: DataFrame
-
   /** Dictionary garbage collection — the compaction-time sweep the
     * append-only id discipline defers: drop entries no stored row
     * references (terms orphaned by deletes/clears). Ids are FROZEN —
@@ -218,7 +191,13 @@ trait DictBackend extends QuadStore {
     * file. Atomic tmp-write + swap like every rewrite here. Returns
     * the number of entries removed. */
   def vacuumDictionary(): Long = {
-    val ids = referencedIds.dropDuplicates()
+    // every id any stored row references; merge-on-read keeps
+    // TOMBSTONED history (time travel must keep decoding it)
+    val rows = storedRows
+    val ids = rows.select(col("s_id").as("rid"))
+      .unionAll(rows.select(col("p_id").as("rid")))
+      .unionAll(rows.select(col("o_id").as("rid")))
+      .dropDuplicates()
     val dict = readDict()
     val survivors = dict.join(ids, dict("id") === ids("rid"), "left_semi")
     val removed = dict.count() - survivors.count()
@@ -268,97 +247,12 @@ object DictBackend {
 }
 
 /** Merge-on-write dict store: set-semantics dedup at insert time, reads
-  * are plain encoded scans. See [[DictBackend]] for the layout. */
+  * are plain encoded scans. See [[DictBackend]] for the layout;
+  * compaction clusters by `(p_id, s_id, o_id)`, the id-space twin of the
+  * string store's predicate-first sort — the same parquet row-group
+  * min/max pruning over 8-byte stats instead of strings. */
 final class DictQuadStore(val spark: SparkSession, val path: String)
-    extends DictBackend {
-  import DictQuadStore._
-
-  def readEncoded(): DataFrame =
-    if (!fs.exists(new Path(quadsPath))) empty(encSchema)
-    else spark.read.schema(encSchema).option("basePath", quadsPath)
-      .parquet(quadsPath)
-      .select(encSchema.fieldNames.map(col).toIndexedSeq: _*)
-
-  protected def referencedIds: DataFrame = {
-    val enc = readEncoded()
-    enc.select(col("s_id").as("rid"))
-      .unionAll(enc.select(col("p_id").as("rid")))
-      .unionAll(enc.select(col("o_id").as("rid")))
-  }
-
-  /** Set-semantics insert, id-space: extend the dictionary, encode the
-    * batch, anti-join the target graphs' encoded quads on `(graph,
-    * s_id, p_id, o_id)` — plain equi keys, ids are never null — and
-    * append. Only increment-sized data is encoded; existing quads are
-    * scanned (partition-pruned), never rewritten. */
-  def appendDistinct(quads: DataFrame,
-      knownGraphs: Option[Seq[String]] = None): Unit = {
-    val batch = quads
-      .select(GraphStore.schema.fieldNames.map(col).toIndexedSeq: _*)
-      .dropDuplicates(GraphStore.schema.fieldNames.toIndexedSeq)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      extendDictionary(batch)
-      val enc = TermDictionary.encode(batch, readDict().select("term", "id"))
-      val graphs = knownGraphs.getOrElse(
-        batch.select("graph").distinct().collect().map(_.getString(0)).toSeq)
-      val existing = readGraphsEncoded(graphs.toIndexedSeq)
-      val fresh = enc.join(existing, encSchema.fieldNames.toIndexedSeq, "left_anti")
-      fresh.write.partitionBy("graph").mode("append").parquet(quadsPath)
-    } finally { batch.unpersist(blocking = false); () }
-  }
-
-  def insertData(quads: Seq[Quad]): Unit = {
-    import spark.implicits._
-    appendDistinct(quads.toDF(), Some(quads.map(_.graph).distinct))
-  }
-
-  /** DELETE in id space: encode the delete set against the CURRENT
-    * dictionary (a term the dictionary has never seen cannot identify a
-    * stored quad — encode's inner joins drop such rows, which is the
-    * correct no-op), anti-join the affected partitions, swap them in.
-    * Dictionary entries stay (append-only ids). */
-  def deleteQuads(quads: DataFrame,
-      knownGraphs: Option[Seq[String]] = None): Unit = {
-    val del = quads.select(GraphStore.schema.fieldNames.map(col).toIndexedSeq: _*)
-    val graphs = knownGraphs.getOrElse(
-      del.select("graph").distinct().collect().map(_.getString(0)).toSeq)
-      .filter(g => fs.exists(partitionDir(g)))
-    if (graphs.isEmpty) return
-    val delEnc = TermDictionary.encode(del, readDict().select("term", "id"))
-    val existing = readGraphsEncoded(graphs.toIndexedSeq)
-    val remaining =
-      existing.join(delEnc, encSchema.fieldNames.toIndexedSeq, "left_anti")
-    val tmp = new Path(quadsPath + s".delete-${System.nanoTime()}")
-    remaining.write.partitionBy("graph").parquet(tmp.toString)
-    graphs.foreach { g =>
-      clearGraph(g)
-      val src = new Path(tmp, "graph=" + ExternalCatalogUtils.escapePathName(g))
-      if (fs.exists(src)) fs.rename(src, partitionDir(g))
-    }
-    fs.delete(tmp, true)
-  }
-
-  def deleteData(quads: Seq[Quad]): Unit = {
-    import spark.implicits._
-    deleteQuads(quads.toDF(), Some(quads.map(_.graph).distinct))
-  }
-
-  /** Compaction clusters by `(p_id, s_id, o_id)` — the id-space twin of
-    * [[GraphStore.compact]]'s predicate-first sort: sorted ids give the
-    * same parquet row-group min/max pruning for constant-predicate and
-    * constant-subject probes, over 8-byte stats instead of strings. */
-  def compact(graph: String, numFiles: Int = 1): Unit = {
-    val quads = readGraphsEncoded(Seq(graph)).coalesce(numFiles)
-      .sortWithinPartitions("graph", "p_id", "s_id", "o_id")
-    val tmp = new Path(quadsPath + s".compact-${System.nanoTime()}")
-    quads.write.partitionBy("graph").parquet(tmp.toString)
-    clearGraph(graph)
-    val src = new Path(tmp, "graph=" + ExternalCatalogUtils.escapePathName(graph))
-    if (fs.exists(src)) fs.rename(src, partitionDir(graph))
-    fs.delete(tmp, true)
-  }
-}
+    extends DictBackend with MergeOnWrite
 
 object DictQuadStore {
   val dictSchema: StructType = StructType(Seq(
@@ -384,281 +278,26 @@ object DictQuadStore {
   * reconstruction itself benefits from the encoding: the per-quad
   * identity it aggregates and anti-joins on is `(graph, 3 longs)`
   * instead of seven string columns, so the merge shuffle carries
-  * ~24-byte keys. Read-optimized split, auto-compaction policy, and
-  * batch-id time travel mirror [[MergeOnReadStore]] exactly; the
-  * engine sees [[readEncoded]] (merged, id-space) through the shared
-  * [[DictBackend]] surface, so SPARQL plans are identical to
-  * [[DictQuadStore]]'s above the scan.
+  * ~24-byte keys. The engine sees [[readEncoded]] (merged, id-space)
+  * through the shared [[DictBackend]] surface, so SPARQL plans are
+  * identical to [[DictQuadStore]]'s above the scan; the change feed and
+  * snapshots decode only their own rows, at the very end.
   *
   * Dictionary discipline under deltas: INSERT deltas extend the
   * dictionary first (increment-sized); tombstones never do — a
   * tombstone whose terms the dictionary lacks cannot identify any
   * stored quad, so encode's inner join dropping it IS the correct
-  * no-op, and delete batches allocate no ids.
+  * no-op, and delete batches allocate no ids. Vacuum keeps every term
+  * the history references (time travel must keep decoding it).
   */
 final class DictMorStore(val spark: SparkSession, val path: String)
-    extends DictBackend {
-  import DictQuadStore.encSchema
+    extends DictBackend with MergeOnRead
 
-  private val deltaSchema: StructType = StructType(encSchema.fields ++ Seq(
-    StructField("batch_id", LongType), StructField("op", StringType)))
-
-  /** Writer-local monotonic batch ids (same discipline as
-    * [[MergeOnReadStore]]: wall-clock-seeded so ids stay monotonic
-    * across process restarts). */
-  private val batchCounter =
-    new java.util.concurrent.atomic.AtomicLong(System.currentTimeMillis() * 1000L)
-  private def nextBatchId(): Long = batchCounter.incrementAndGet()
-
-  /** O(delta) write: encode the batch (inserts extend the dictionary
-    * by their new terms first) and append — no existing quad data is
-    * read or rewritten. */
-  def appendDelta(quads: DataFrame, batchId: Long, op: String = "i"): Unit = {
-    require(batchId >= 0, s"batch ids must be >= 0 (got $batchId); " +
-      s"${MergeOnReadStore.CompactedBatchId} is reserved for compacted data")
-    val batch = quads
-      .select(GraphStore.schema.fieldNames.map(col).toIndexedSeq: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (op == "i") extendDictionary(batch)
-      TermDictionary.encode(batch, readDict().select("term", "id"))
-        .withColumn("batch_id", lit(batchId))
-        .withColumn("op", lit(op))
-        .write.partitionBy("graph").mode("append").parquet(quadsPath)
-    } finally { batch.unpersist(blocking = false); () }
-  }
-
-  /** Raw encoded deltas (all batches, tombstones included). */
-  def readDeltas(): DataFrame =
-    if (!fs.exists(new Path(quadsPath))) empty(deltaSchema)
-    else spark.read.schema(deltaSchema).option("basePath", quadsPath)
-      .parquet(quadsPath)
-      .select(deltaSchema.fieldNames.map(col).toIndexedSeq: _*)
-
-  protected def referencedIds: DataFrame = {
-    // ALL deltas, tombstones included: snapshots may still decode them
-    val d = readDeltas()
-    d.select(col("s_id").as("rid"))
-      .unionAll(d.select(col("p_id").as("rid")))
-      .unionAll(d.select(col("o_id").as("rid")))
-  }
-
-  /** Latest-wins set-semantics view IN ID SPACE — the read-optimized
-    * split of [[MergeOnReadStore.readMerged]] over `(graph, s_id,
-    * p_id, o_id)` keys: the compacted base skips the aggregation, only
-    * the post-compaction tail aggregates, and the base is corrected by
-    * a plain (never-null keys!) anti-join against the tail's touched
-    * identities. */
-  def readEncoded(): DataFrame = {
-    val keys = encSchema.fieldNames.toIndexedSeq
-    val deltas = readDeltas()
-    // never-compacted fast path — see MergeOnReadStore.readMerged (the
-    // horizon marker is persisted before any base rows can exist)
-    if (compactionHorizon().isEmpty)
-      return deltas
-        .groupBy(keys.map(col): _*)
-        .agg(max_by(col("op"), col("batch_id")).as("last_op"))
-        .filter(col("last_op") === "i")
-        .select(keys.map(col): _*)
-    val base = deltas
-      .filter(col("batch_id") === MergeOnReadStore.CompactedBatchId
-        && col("op") === "i")
-      .select(keys.map(col): _*)
-    val tail = deltas
-      .filter(col("batch_id") =!= MergeOnReadStore.CompactedBatchId)
-    val tailMerged = tail
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(col("op"), col("batch_id")).as("last_op"))
-    val tailInserts = tailMerged.filter(col("last_op") === "i")
-      .select(keys.map(col): _*)
-    val tailKeys = tailMerged.select(keys.map(col): _*)
-    base.join(tailKeys, keys, "left_anti").unionByName(tailInserts)
-  }
-
-  /** TIME TRAVEL, still encoded: the id-space view as of batch `asOf`
-    * (same horizon guard as the string MOR store — compaction truncates
-    * reach). [[DictSnapshotStore]] serves this to the engine, so a
-    * historical SPARQL query plans id-space like a live one. */
-  def readEncodedAsOf(asOf: Long): DataFrame = {
-    val h = compactionHorizon()
-    require(h.forall(asOf >= _),
-      s"snapshot as-of batch $asOf is unreachable: compaction folded " +
-        s"history up to batch ${h.get} into the base (retention trade); " +
-        "read a version >= the horizon or stop compacting this store")
-    val keys = encSchema.fieldNames.toIndexedSeq
-    readDeltas()
-      .filter(col("batch_id") <= asOf
-        || col("batch_id") === MergeOnReadStore.CompactedBatchId)
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(col("op"), col("batch_id")).as("last_op"))
-      .filter(col("last_op") === "i")
-      .select(keys.map(col): _*)
-  }
-
-  def readAsOf(asOf: Long): DataFrame = decodeQuads(readEncodedAsOf(asOf))
-
-  def compactionHorizon(): Option[Long] = {
-    val dir = new Path(path, "_compaction")
-    if (!fs.exists(dir)) None
-    else {
-      val hs = fs.listStatus(dir).toSeq.map { st =>
-        val in = fs.open(st.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      }
-      if (hs.isEmpty) None else Some(hs.max)
-    }
-  }
-
-  private def writeHorizon(graph: String, horizon: Long): Unit = {
-    val dir = new Path(path, "_compaction")
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val f = new Path(dir, ExternalCatalogUtils.escapePathName(graph))
-    val out = fs.create(f, true)
-    try out.write(horizon.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Distinct real batch ids — the version history. */
-  def versions(): Seq[Long] =
-    readDeltas().select(col("batch_id")).distinct()
-      .collect().map(_.getLong(0))
-      .filter(_ != MergeOnReadStore.CompactedBatchId).sorted.toIndexedSeq
-
-  /** CHANGE DATA FEED in id space: [[MergeOnReadStore.changesBetween]]'s
-    * window-delta plan over `(graph, s_id, p_id, o_id)` — the touched
-    * identities broadcast-semi-join the history on three NEVER-NULL
-    * longs (plain equi keys, no `<=>`), both endpoint states aggregate
-    * 8-byte keys, and the dictionary decodes ONLY the change rows at
-    * the very end (CDF output is window-sized, so the decode joins
-    * are too — the store's full vocabulary never moves). */
-  def changesBetweenEncoded(fromBatch: Long, toBatch: Long): DataFrame = {
-    require(fromBatch >= 0 && toBatch >= fromBatch,
-      s"bad CDF window [$fromBatch, $toBatch]: need 0 <= from <= to")
-    val h = compactionHorizon()
-    require(h.forall(fromBatch >= _),
-      s"CDF baseline batch $fromBatch is unreachable: compaction folded " +
-        s"history up to batch ${h.get} into the base (retention trade)")
-    val keys = encSchema.fieldNames.toIndexedSeq
-    val deltas = readDeltas()
-    val touched = deltas
-      .filter(col("batch_id") > fromBatch && col("batch_id") <= toBatch)
-      .select(keys.map(col): _*).distinct()
-    val history = deltas.join(broadcast(touched), keys, "left_semi")
-    def stateAt(asOf: Long, side: Int) = history
-      .filter(col("batch_id") <= asOf
-        || col("batch_id") === MergeOnReadStore.CompactedBatchId)
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(col("op"), col("batch_id")).as("last_op"))
-      .filter(col("last_op") === "i")
-      .select(keys.map(col): _*)
-      .withColumn("cdf_side", lit(side))
-    stateAt(fromBatch, 0).unionByName(stateAt(toBatch, 1))
-      .groupBy(keys.map(col): _*)
-      .agg(max(when(col("cdf_side") === 0, 1).otherwise(0)).as("cdf_b"),
-        max(when(col("cdf_side") === 1, 1).otherwise(0)).as("cdf_a"))
-      .filter(col("cdf_b") =!= col("cdf_a"))
-      .withColumn("change",
-        when(col("cdf_a") === 1, lit("insert")).otherwise(lit("delete")))
-      .select(keys.map(col) :+ col("change"): _*)
-  }
-
-  /** Decoded CDF rows: the dictionary joins run over the window-sized
-    * change set, not the store. */
-  def changesBetween(fromBatch: Long, toBatch: Long): DataFrame = {
-    val enc = changesBetweenEncoded(fromBatch, toBatch)
-    val dict = readDict()
-    val sD = dict.select(col("id").as("_s_id"), col("v").as("s"))
-    val pD = dict.select(col("id").as("_p_id"), col("v").as("p"))
-    val oD = dict.select(col("id").as("_o_id"), col("v").as("o_value"),
-      col("dt").as("o_type"), col("lg").as("o_lang"), col("k").as("o_kind"))
-    enc
-      .join(sD, col("s_id") === col("_s_id"))
-      .join(pD, col("p_id") === col("_p_id"))
-      .join(oD, col("o_id") === col("_o_id"))
-      .select(GraphStore.schema.fieldNames.map(col).toIndexedSeq
-        :+ col("change"): _*)
-  }
-
-  // ---- QuadStore surface: set-semantics ops as O(delta) deltas
-  def appendDistinct(quads: DataFrame,
-      knownGraphs: Option[Seq[String]] = None): Unit =
-    appendDelta(quads, nextBatchId())
-
-  def insertData(quads: Seq[Quad]): Unit = {
-    import spark.implicits._
-    appendDistinct(quads.toDF())
-  }
-
-  /** DELETE as tombstones — O(delta), no partition rewrite. */
-  def deleteQuads(quads: DataFrame,
-      knownGraphs: Option[Seq[String]] = None): Unit =
-    appendDelta(quads, nextBatchId(), op = "d")
-
-  def deleteData(quads: Seq[Quad]): Unit = {
-    import spark.implicits._
-    deleteQuads(quads.toDF())
-  }
-
-  /** Bounded-tail auto-compaction policy, identical trigger to
-    * [[MergeOnReadStore.compactIfNeeded]]. */
-  def compactIfNeeded(graph: String, maxTailBatches: Int = 8,
-      numFiles: Int = 1): Boolean = {
-    val tailBatches = readDeltas().where(col("graph") === graph)
-      .filter(col("batch_id") =!= MergeOnReadStore.CompactedBatchId)
-      .select(col("batch_id")).distinct().count()
-    if (tailBatches > maxTailBatches) { compact(graph, numFiles); true }
-    else false
-  }
-
-  /** Collapse one graph partition to the reserved compacted
-    * pseudo-batch, clustered `(p_id, s_id, o_id)` for row-group
-    * pruning; the horizon persists just before the swap (fast-path
-    * invariant). */
-  def compact(graph: String, numFiles: Int = 1): Unit = {
-    val maxBatch = readDeltas().where(col("graph") === graph)
-      .filter(col("batch_id") =!= MergeOnReadStore.CompactedBatchId)
-      .agg(max(col("batch_id"))).collect().head
-    val merged = readGraphsEncoded(Seq(graph)).coalesce(numFiles)
-      .sortWithinPartitions("graph", "p_id", "s_id", "o_id")
-      .withColumn("batch_id", lit(MergeOnReadStore.CompactedBatchId))
-      .withColumn("op", lit("i"))
-    val tmp = new Path(quadsPath + s".compact-${System.nanoTime()}")
-    merged.write.partitionBy("graph").parquet(tmp.toString)
-    // horizon BEFORE the swap — readEncoded's never-compacted fast
-    // path needs "no marker implies no base rows" (see
-    // MergeOnReadStore.compact for the crash-state rationale)
-    if (!maxBatch.isNullAt(0)) writeHorizon(graph, maxBatch.getLong(0))
-    val part = "graph=" + ExternalCatalogUtils.escapePathName(graph)
-    val dst = new Path(quadsPath, part)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    val src = new Path(tmp, part)
-    if (fs.exists(src)) fs.rename(src, dst)
-    fs.delete(tmp, true)
-  }
-}
-
-/** Read-only SPARQL surface over a dict merge-on-read SNAPSHOT — the
-  * id-space twin of [[SnapshotStore]]: `new GraphEngine(new
-  * DictSnapshotStore(store, v))` queries history with the batch filter
-  * pushed into the delta scan AND every pattern join still over longs.
-  * The dictionary is shared with the live store (append-only frozen
-  * ids: entries added after the snapshot cannot be referenced by
-  * snapshot-visible rows, so decoding is exact). Mutations and vacuum
-  * are rejected loudly.
+/** Read-only SPARQL surface over a dict merge-on-read snapshot — see
+  * [[ReadOnlySnapshot]]. The dictionary is shared with the live store
+  * (append-only frozen ids: entries added after the snapshot cannot be
+  * referenced by snapshot-visible rows, so decoding is exact); vacuum is
+  * rejected with the mutations.
   */
-final class DictSnapshotStore(underlying: DictMorStore, asOf: Long)
-    extends DictBackend {
-  def spark: SparkSession = underlying.spark
-  def path: String = underlying.path
-  def readEncoded(): DataFrame = underlying.readEncodedAsOf(asOf)
-  private def readOnly = throw new UnsupportedOperationException(
-    s"snapshot as-of batch $asOf is read-only")
-  protected def referencedIds: DataFrame = readOnly
-  def appendDistinct(quads: DataFrame, knownGraphs: Option[Seq[String]]): Unit = readOnly
-  def insertData(quads: Seq[Quad]): Unit = readOnly
-  def deleteQuads(quads: DataFrame, knownGraphs: Option[Seq[String]]): Unit = readOnly
-  def deleteData(quads: Seq[Quad]): Unit = readOnly
-  override def clearGraph(graph: String): Unit = readOnly
-  override def dropGraph(graph: String): Unit = readOnly
-  def compact(graph: String, numFiles: Int): Unit = readOnly
-}
+final class DictSnapshotStore(protected val underlying: DictMorStore,
+    protected val asOf: Long) extends DictBackend with ReadOnlySnapshot

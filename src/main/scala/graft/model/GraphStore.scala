@@ -1,14 +1,14 @@
 package graft.model
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The statement-store contract the SPARQL engine runs against. Two
-  * backends ship: [[GraphStore]] (merge-on-write — dedup at insert,
-  * reads are plain scans) and [[MergeOnReadStore]] (O(delta) writes,
+/** The statement-store contract the SPARQL engine runs against. The
+  * backends combine a term encoding (string columns: [[GraphStore]],
+  * [[MergeOnReadStore]]; dictionary ids: [[DictQuadStore]],
+  * [[DictMorStore]]) with a write policy ([[MergeOnWrite]] — dedup at
+  * insert, reads are plain scans; [[MergeOnRead]] — O(delta) writes,
   * set semantics reconstructed at read). Same observable graph state,
   * opposite read/write amplification trade — pick per workload.
   */
@@ -22,14 +22,29 @@ trait QuadStore {
   /** The merge (union) of the given named graphs — SPARQL `USING`. */
   def readGraphs(graphs: Seq[String]): DataFrame
   /** Set-semantics insert (Q11): the graph state afterwards contains
-    * each distinct quad once, regardless of batch overlap or replays. */
+    * each distinct quad once, regardless of batch overlap or replays.
+    *
+    * `knownGraphs`: the target graphs when the CALLER knows them
+    * statically (a compiled INSERT writes only its WITH/GRAPH target).
+    * Without it a merge-on-write store must compute the batch an extra
+    * time just to discover the graph set — for a mapping query that
+    * means running the whole WHERE-clause join tree twice. */
   def appendDistinct(quads: DataFrame, knownGraphs: Option[Seq[String]] = None): Unit
-  def insertData(quads: Seq[Quad]): Unit
+  def insertData(quads: Seq[Quad]): Unit =
+    appendDistinct(frameOf(quads), Some(quads.map(_.graph).distinct))
   /** SPARQL DELETE: the given quads are absent afterwards. */
   def deleteQuads(quads: DataFrame, knownGraphs: Option[Seq[String]] = None): Unit
-  def deleteData(quads: Seq[Quad]): Unit
+  def deleteData(quads: Seq[Quad]): Unit =
+    deleteQuads(frameOf(quads), Some(quads.map(_.graph).distinct))
+  private def frameOf(quads: Seq[Quad]): DataFrame = {
+    val sp = spark // stable identifier for the implicits import
+    import sp.implicits._
+    quads.toDF()
+  }
+  /** CLEAR (SILENT) GRAPH — truncate one named graph (Q13). */
   def clearGraph(graph: String): Unit
-  def dropGraph(graph: String): Unit
+  /** DROP (SILENT) GRAPH — the same physical op on a partitioned store. */
+  def dropGraph(graph: String): Unit = clearGraph(graph)
   /** Store maintenance (S9): rewrite one graph's files into `numFiles`
     * for scan efficiency — and, on merge-on-read, collapse history. */
   def compact(graph: String, numFiles: Int = 1): Unit
@@ -39,7 +54,102 @@ trait QuadStore {
   def graphNames(): Seq[String]
 }
 
-/** Parquet-backed quad store partitioned by named graph.
+/** A [[QuadStore]] over one [[PartitionLayout]]. The term encoding
+  * supplies the stored key schema and the encode/decode steps; the write
+  * policy ([[MergeOnWrite]] or [[MergeOnRead]]) supplies the
+  * set-semantics view and the write paths.
+  */
+trait PartitionedStore extends QuadStore {
+  protected def layout: PartitionLayout
+  protected def keys: QuadKeys
+  /** Stored-key rows for string-space quads; no side effects. */
+  protected def encode(quads: DataFrame): DataFrame
+  /** Runs `write` over the encoded `batch` (string-space quads); an
+    * insert first makes the batch's terms encodable. */
+  protected def withEncoded(batch: DataFrame, insert: Boolean)(write: DataFrame => Unit): Unit
+  /** String-space quads, plus the `extra` columns, for stored-key rows. */
+  protected def decode(rows: DataFrame, extra: Seq[String] = Nil): DataFrame
+  /** Every stored row, history included. */
+  protected def storedRows: DataFrame
+
+  /** The set-semantics view in the stored key schema — what the SPARQL
+    * compiler scans (identical to [[read]] on string keys). */
+  def readEncoded(): DataFrame
+  def readGraphsEncoded(graphs: Seq[String]): DataFrame =
+    readEncoded().where(col("graph").isin(graphs: _*))
+  def read(): DataFrame = decode(readEncoded())
+  /** Compiles to partition pruning, not a scan-and-filter; on dictionary
+    * ids the graphs are pruned BEFORE the decode joins. */
+  def readGraphs(graphs: Seq[String]): DataFrame = decode(readGraphsEncoded(graphs))
+  def graphNames(): Seq[String] = layout.graphNames()
+  def clearGraph(graph: String): Unit = layout.clearGraph(graph)
+}
+
+/** The merge-on-write policy: set-semantics dedup at insert time, reads
+  * are plain partition scans.
+  */
+trait MergeOnWrite extends PartitionedStore {
+  def readEncoded(): DataFrame = layout.scan(keys.schema)
+  protected def storedRows: DataFrame = readEncoded()
+
+  private def graphsOf(quads: DataFrame): Seq[String] =
+    quads.select("graph").distinct().collect().map(_.getString(0)).toSeq
+
+  /** Set-semantics append (Q11): dedup the batch, encode it, and drop
+    * the quads already present in the target graphs (anti-join on the
+    * full key; existing quads are scanned partition-pruned, never
+    * rewritten), so overlapping inserts in any order reach an
+    * order-independent final state. */
+  def appendDistinct(quads: DataFrame, knownGraphs: Option[Seq[String]]): Unit = {
+    val batch = quads.select(GraphStore.columns: _*)
+      .dropDuplicates(GraphStore.schema.fieldNames.toIndexedSeq)
+    withEncoded(batch, insert = true) { enc =>
+      val graphs = knownGraphs.getOrElse(graphsOf(batch))
+      layout.append(keys.join(enc, readGraphsEncoded(graphs.toIndexedSeq), "left_anti"))
+    }
+  }
+
+  /** Remove exact quads (SPARQL DELETE DATA / DELETE..WHERE). Only the
+    * affected graph partitions are rewritten: survivors = existing
+    * anti-join the delete set, staged and swapped in. A quad whose terms
+    * the store cannot encode cannot identify a stored quad, so it drops
+    * out as the correct no-op. For high-churn deletes at scale,
+    * [[MergeOnRead]] tombstones replace the rewrite entirely. */
+  def deleteQuads(quads: DataFrame, knownGraphs: Option[Seq[String]]): Unit = {
+    val del = quads.select(GraphStore.columns: _*)
+    val graphs = knownGraphs.getOrElse(graphsOf(del)).filter(layout.hasGraph)
+    if (graphs.nonEmpty)
+      layout.replace(graphs, keys.join(readGraphsEncoded(graphs.toIndexedSeq),
+        encode(del), "left_anti"), "delete")
+  }
+
+  /** Store maintenance (S9, the reference's post-load optimize): rewrite
+    * a graph partition into few large files SORTED by
+    * `keys.clusterOrder` within each file — predicate-constant patterns
+    * are the dominant scan shape, and with the sort a `p = <const>` scan
+    * filter skips every row group whose p-range excludes the constant.
+    * A clustered index build for one no-extra-shuffle sort. */
+  def compact(graph: String, numFiles: Int): Unit =
+    rewrite(graph, "compact")(_.coalesce(numFiles)
+      .sortWithinPartitions(keys.clusterOrder.map(col): _*))
+
+  /** Staged rewrite of one graph partition through `layoutOf`. */
+  protected def rewrite(graph: String, tag: String)(layoutOf: DataFrame => DataFrame): Unit =
+    layout.replace(Seq(graph), layoutOf(readGraphsEncoded(Seq(graph))), tag)
+}
+
+/** String-column encoding: the quad columns are stored as they are, so
+  * encode and decode are projections. */
+trait StringTerms extends PartitionedStore {
+  protected final lazy val layout: PartitionLayout = new PartitionLayout(spark, path)
+  protected final def keys: QuadKeys = QuadKeys.Strings
+  protected def encode(quads: DataFrame): DataFrame = quads.select(GraphStore.columns: _*)
+  protected def withEncoded(batch: DataFrame, insert: Boolean)(
+      write: DataFrame => Unit): Unit = write(batch)
+  protected def decode(rows: DataFrame, extra: Seq[String]): DataFrame = rows
+}
+
+/** Parquet-backed quad store partitioned by named graph, merge-on-write.
   *
   * Replaces the reference's Stardog endpoint as the statement store
   * (SURVEY.md §1.1). Named-graph scoping (`USING` / `WITH` / `GRAPH`,
@@ -54,133 +164,11 @@ trait QuadStore {
   * graphs, so the 16 mapping tasks can insert overlapping triples in any
   * order with an order-independent final state.
   */
-final class GraphStore(val spark: SparkSession, val path: String) extends QuadStore {
-  import GraphStore._
-
-  private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def exists: Boolean = fs.exists(new Path(path))
-
-  private def emptyQuads: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** All quads, `graph` restored from the partition column. */
-  def read(): DataFrame =
-    if (!exists) emptyQuads
-    else spark.read.schema(schema).option("basePath", path).parquet(path)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-
-  /** The merge (union) of the given named graphs — SPARQL `USING g1 USING
-    * g2`. Compiles to partition pruning, not a scan-and-filter. */
-  def readGraphs(graphs: Seq[String]): DataFrame =
-    read().where(col("graph").isin(graphs: _*))
+final class GraphStore(val spark: SparkSession, val path: String)
+    extends StringTerms with MergeOnWrite {
 
   /** Plain append (caller owns dedup). */
-  def append(quads: DataFrame): Unit =
-    quads.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .write.partitionBy("graph").mode("append").parquet(path)
-
-  /** Set-semantics append: dedup batch + drop quads already present in
-    * the target graphs (Q11). Null-safe join — plain equality would let
-    * every quad with a null o_type/o_lang through again.
-    *
-    * `knownGraphs`: the target graphs when the CALLER knows them
-    * statically (a compiled INSERT writes only its WITH/GRAPH target).
-    * Without it the batch must be computed an extra time just to
-    * discover the graph set — for a mapping query that means running
-    * the whole WHERE-clause join tree twice. */
-  def appendDistinct(quads: DataFrame,
-      knownGraphs: Option[Seq[String]] = None): Unit = {
-    val batch = quads.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .dropDuplicates(schema.fieldNames.toIndexedSeq)
-    val graphs = knownGraphs.getOrElse(
-      batch.select("graph").distinct().collect().map(_.getString(0)).toSeq)
-    val existing = readGraphs(graphs.toIndexedSeq)
-    val cond = schema.fieldNames.map(f => batch(f) <=> existing(f)).reduce(_ && _)
-    val fresh = batch.join(existing, cond, "left_anti")
-    append(fresh)
-  }
-
-  def insertData(quads: Seq[Quad]): Unit = {
-    import spark.implicits._
-    appendDistinct(quads.toDF(), Some(quads.map(_.graph).distinct))
-  }
-
-  /** Remove exact quads (SPARQL DELETE DATA / DELETE..WHERE). Only the
-    * affected graph partitions are rewritten: survivors = existing
-    * anti-join delete set (null-safe — null o_type/o_lang are part of
-    * the identity), written to a fresh partition dir and swapped in.
-    * Untouched graphs never move. For high-churn deletes at scale,
-    * [[MergeOnReadStore]] tombstones replace the rewrite entirely. */
-  def deleteQuads(quads: DataFrame,
-      knownGraphs: Option[Seq[String]] = None): Unit = {
-    val del = quads.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    val graphs = knownGraphs.getOrElse(
-      del.select("graph").distinct().collect().map(_.getString(0)).toSeq)
-      .filter(g => fs.exists(partitionDir(g)))
-    if (graphs.isEmpty) return
-    val existing = readGraphs(graphs.toIndexedSeq)
-    val cond = schema.fieldNames.map(f => existing(f) <=> del(f)).reduce(_ && _)
-    val remaining = existing.join(del, cond, "left_anti")
-    val tmp = new Path(path + s".delete-${System.nanoTime()}")
-    remaining.write.partitionBy("graph").parquet(tmp.toString)
-    graphs.foreach { g =>
-      clearGraph(g)
-      val src = new Path(tmp, "graph=" + ExternalCatalogUtils.escapePathName(g))
-      if (fs.exists(src)) fs.rename(src, partitionDir(g))
-    }
-    fs.delete(tmp, true)
-  }
-
-  def deleteData(quads: Seq[Quad]): Unit = {
-    import spark.implicits._
-    deleteQuads(quads.toDF(), Some(quads.map(_.graph).distinct))
-  }
-
-  private def partitionDir(graph: String): Path =
-    new Path(path, "graph=" + ExternalCatalogUtils.escapePathName(graph))
-
-  /** CLEAR (SILENT) GRAPH — truncate one named graph (Q13). */
-  def clearGraph(graph: String): Unit = {
-    val dir = partitionDir(graph)
-    if (fs.exists(dir)) fs.delete(dir, true)
-  }
-
-  /** Graph list = partition directory list — pure metadata, no scan. */
-  def graphNames(): Seq[String] =
-    if (!exists) Seq.empty
-    else fs.listStatus(new Path(path)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("graph="))
-      .map(st => ExternalCatalogUtils.unescapePathName(
-        st.getPath.getName.stripPrefix("graph=")))
-
-  /** DROP (SILENT) GRAPH — same physical op on a partitioned store. */
-  def dropGraph(graph: String): Unit = clearGraph(graph)
-
-  /** Store maintenance (S9, the reference's post-load optimize): rewrite
-    * a graph partition into few large files for scan efficiency —
-    * SORTED by (p, s, o_value) within each file. Predicate-constant
-    * patterns are the dominant scan shape in every SPARQL workload, and
-    * parquet keeps per-row-group min/max statistics: with the sort, a
-    * `p = <iri>` scan filter skips every row group whose p-range
-    * excludes the constant (and const-subject probes prune within a
-    * predicate run). On a 100 TB store this turns compaction into a
-    * clustered index build — the same sorted-layout trick RDF-3X bakes
-    * into its permutation indexes — for one no-extra-shuffle sort. */
-  def compact(graph: String, numFiles: Int = 1): Unit = {
-    // `graph` leads the sort so the partitionBy writer's required
-    // ordering (partition columns first) is already satisfied and it
-    // does NOT inject its own non-stable sort on top, which would
-    // scramble the (p, s, o_value) clustering
-    val quads = readGraphs(Seq(graph)).coalesce(numFiles)
-      .sortWithinPartitions("graph", "p", "s", "o_value")
-    val tmp = new Path(path + s".compact-${System.nanoTime()}")
-    quads.write.partitionBy("graph").parquet(tmp.toString)
-    clearGraph(graph)
-    val src = new Path(tmp, "graph=" + ExternalCatalogUtils.escapePathName(graph))
-    if (fs.exists(src)) fs.rename(src, partitionDir(graph))
-    fs.delete(tmp, true)
-  }
+  def append(quads: DataFrame): Unit = layout.append(encode(quads))
 
   /** Range-CLUSTERED maintenance twin of [[compact]]: rewrite one graph
     * partition RANGE-partitioned on SUBJECT — every output file covers
@@ -194,17 +182,9 @@ final class GraphStore(val spark: SparkSession, val path: String) extends QuadSt
     * them. (p, o_value) trail the within-file sort so predicate runs
     * stay row-group-skippable inside each subject range. The staged
     * write + directory swap is [[compact]]'s crash discipline. */
-  def clusterGraph(graph: String, numFiles: Int = 16): Unit = {
-    val quads = readGraphs(Seq(graph))
-      .repartitionByRange(numFiles, col("s"))
-      .sortWithinPartitions("graph", "s", "p", "o_value")
-    val tmp = new Path(path + s".cluster-${System.nanoTime()}")
-    quads.write.partitionBy("graph").parquet(tmp.toString)
-    clearGraph(graph)
-    val src = new Path(tmp, "graph=" + ExternalCatalogUtils.escapePathName(graph))
-    if (fs.exists(src)) fs.rename(src, partitionDir(graph))
-    fs.delete(tmp, true)
-  }
+  def clusterGraph(graph: String, numFiles: Int = 16): Unit =
+    rewrite(graph, "cluster")(_.repartitionByRange(numFiles, col("s"))
+      .sortWithinPartitions("graph", "s", "p", "o_value"))
 }
 
 object GraphStore {
@@ -216,349 +196,25 @@ object GraphStore {
     StructField("o_type", StringType),
     StructField("o_lang", StringType),
     StructField("o_kind", StringType)))
+
+  private[model] val columns: Seq[Column] = schema.fieldNames.toIndexedSeq.map(col)
 }
 
-/** Merge-on-read variant of the quad store (the incremental-dedup design
-  * in README "Scale design"): `appendDistinct`'s read-before-write scan
-  * per insert dominates once the base is large, so writers here append
-  * RAW deltas — inserts or tombstones — tagged with a caller-supplied
-  * monotonically increasing batch id. Ingest is O(delta) with no
-  * coordination between writers; readers reconstruct set semantics with
-  * one latest-batch-wins aggregation per quad identity, which the next
-  * aggregation downstream usually absorbs. `compact` collapses a graph
-  * partition back to a pure-insert base so read amplification stays
-  * bounded. The Iceberg/Hudi merge-on-read trade, on a plain
-  * partitioned-parquet layout.
+/** Merge-on-read quad store over string columns: `appendDistinct`'s
+  * read-before-write scan per insert dominates once the base is large,
+  * so writers here append RAW deltas — see [[DeltaLog]]. The horizon
+  * markers live in `<path>/_compaction`.
   */
 final class MergeOnReadStore(val spark: SparkSession, val path: String)
-    extends QuadStore {
-  import GraphStore.schema
-
-  private def fs =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val deltaSchema: StructType = StructType(schema.fields ++ Seq(
-    StructField("batch_id", LongType), StructField("op", StringType)))
-
-  /** Writer-local monotonic batch ids for the [[QuadStore]] surface
-    * (callers that manage their own batches pass explicit ids to
-    * [[appendDelta]]). Wall-clock-seeded so ids stay monotonic across
-    * process restarts; concurrent writers get distinct ids with
-    * overwhelming probability, and quad-level last-wins only needs
-    * order between CONFLICTING writes, which a sane ingest pipeline
-    * serializes per key anyway. */
-  private val batchCounter =
-    new java.util.concurrent.atomic.AtomicLong(System.currentTimeMillis() * 1000L)
-  private def nextBatchId(): Long = batchCounter.incrementAndGet()
-
-  /** O(delta) write: no existing data is read. `op` = "i" (insert) or
-    * "d" (delete tombstone masking every earlier batch of that quad).
-    * Batch ids must be non-negative — [[MergeOnReadStore.CompactedBatchId]]
-    * is reserved for the read-optimized compacted base. */
-  def appendDelta(quads: DataFrame, batchId: Long, op: String = "i"): Unit = {
-    require(batchId >= 0, s"batch ids must be >= 0 (got $batchId); " +
-      s"${MergeOnReadStore.CompactedBatchId} is reserved for compacted data")
-    quads.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .withColumn("batch_id", lit(batchId))
-      .withColumn("op", lit(op))
-      .write.partitionBy("graph").mode("append").parquet(path)
-  }
-
-  /** Raw deltas (all batches, tombstones included). */
-  def readDeltas(): DataFrame =
-    if (!fs.exists(new Path(path)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], deltaSchema)
-    else spark.read.schema(deltaSchema).option("basePath", path).parquet(path)
-      .select(deltaSchema.fieldNames.map(col).toIndexedSeq: _*)
-
-  /** Set-semantics view: per quad identity the LATEST batch wins, and it
-    * must be an insert. READ-OPTIMIZED split (the Hudi/Iceberg MOR read):
-    * the compacted base (reserved batch [[MergeOnReadStore.CompactedBatchId]],
-    * distinct inserts by construction of [[compact]]) needs NO
-    * latest-wins aggregation — only the post-compaction delta TAIL
-    * aggregates, and the base is corrected by an anti-join against the
-    * tail's touched quad keys. After regular compaction the tail is
-    * batch-sized, so AQE broadcasts it and the base contributes a
-    * map-side scan with ZERO corpus shuffle (InferenceScaleProbe
-    * measures the refresh flat at 10x base). Graph-scoped reads prune
-    * delta partitions exactly like the base store (the graph filter
-    * pushes through both union branches and the aggregation).
-    *
-    * NEVER-COMPACTED FAST PATH: a store with no `_compaction` marker
-    * (one driver-side FS stat — [[compact]] persists the horizon
-    * BEFORE the partition swap precisely so "no marker" implies "no
-    * compacted base rows can exist") skips the base scan and the
-    * null-safe anti-join entirely — two fewer stages on every read of
-    * a fresh-ingest store, which is the common case for short update
-    * lifecycles and streaming MOR ingest. */
-  def readMerged(): DataFrame = {
-    val keys = schema.fieldNames.toIndexedSeq
-    val deltas = readDeltas()
-    if (compactionHorizon().isEmpty)
-      return deltas
-        .groupBy(keys.map(col): _*)
-        .agg(max_by(col("op"), col("batch_id")).as("last_op"))
-        .filter(col("last_op") === "i")
-        .select(keys.map(col): _*)
-    val base = deltas
-      .filter(col("batch_id") === MergeOnReadStore.CompactedBatchId
-        && col("op") === "i")
-      .select(keys.map(col): _*)
-    val tail = deltas
-      .filter(col("batch_id") =!= MergeOnReadStore.CompactedBatchId)
-    val tailMerged = tail
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(col("op"), col("batch_id")).as("last_op"))
-    val tailInserts = tailMerged.filter(col("last_op") === "i")
-      .select(keys.map(col): _*)
-    val tailKeys = tailMerged.select(keys.map(col): _*)
-    // Null-safe anti-join: o_type/o_lang are null for IRIs and plain
-    // literals — plain equality never matches a null key, so a tombstone
-    // for the dominant quad shape would silently miss the compacted base.
-    val b = base.alias("mor_base")
-    val t = tailKeys.alias("mor_tail")
-    val cond = keys.map(k => col(s"mor_base.$k") <=> col(s"mor_tail.$k"))
-      .reduce(_ && _)
-    b.join(t, cond, "left_anti").unionByName(tailInserts)
-  }
-
-  def readGraphs(graphs: Seq[String]): DataFrame =
-    readMerged().where(col("graph").isin(graphs: _*))
-
-  /** TIME TRAVEL: the set-semantics view as of batch `asOf` — replay
-    * only deltas with `batch_id <= asOf` through the same latest-wins
-    * aggregation. A snapshot read is a FILTER, not a copy: no data is
-    * duplicated per version, exactly the Iceberg/Hudi snapshot-read
-    * trade on this plain parquet layout. (The filter lands on the
-    * parquet scan as a pushed predicate; `compact` folds a graph's
-    * history into the reserved pseudo-batch and therefore truncates how
-    * far back a snapshot can reach — the compaction-vs-retention trade
-    * every MOR table has. Snapshots older than the recorded compaction
-    * horizon are REJECTED, not silently served the compacted state.) */
-  def readAsOf(asOf: Long): DataFrame = {
-    val h = compactionHorizon()
-    require(h.forall(asOf >= _),
-      s"snapshot as-of batch $asOf is unreachable: compaction folded " +
-        s"history up to batch ${h.get} into the base (retention trade); " +
-        "read a version >= the horizon or stop compacting this store")
-    val keys = GraphStore.schema.fieldNames.toIndexedSeq
-    readDeltas()
-      .filter(col("batch_id") <= asOf
-        || col("batch_id") === MergeOnReadStore.CompactedBatchId)
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(col("op"), col("batch_id")).as("last_op"))
-      .filter(col("last_op") === "i")
-      .select(keys.map(col): _*)
-  }
-
-  /** Max batch id folded into a compacted base by any [[compact]] run, if
-    * one exists — the oldest reachable snapshot. Metadata files live under
-    * `_compaction/` (underscore-prefixed, so Spark's parquet file index
-    * skips them); one tiny file per compacted graph, read driver-side. */
-  def compactionHorizon(): Option[Long] = {
-    val dir = new Path(path, "_compaction")
-    if (!fs.exists(dir)) None
-    else {
-      val hs = fs.listStatus(dir).toSeq.map { st =>
-        val in = fs.open(st.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      }
-      if (hs.isEmpty) None else Some(hs.max)
-    }
-  }
-
-  private def writeHorizon(graph: String, horizon: Long): Unit = {
-    val dir = new Path(path, "_compaction")
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val f = new Path(dir, ExternalCatalogUtils.escapePathName(graph))
-    val out = fs.create(f, true)
-    try out.write(horizon.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Distinct batch ids present (the version history; the reserved
-    * compacted pseudo-batch is not a version) — a batch_id-only column
-    * scan, cheap at any scale. */
-  def versions(): Seq[Long] =
-    readDeltas().select(col("batch_id")).distinct()
-      .collect().map(_.getLong(0))
-      .filter(_ != MergeOnReadStore.CompactedBatchId).sorted.toIndexedSeq
-
-  /** CHANGE DATA FEED: the net per-quad changes between the snapshot
-    * state as-of `fromBatch` (the exclusive baseline) and as-of
-    * `toBatch` (inclusive) — the Delta/Iceberg CDF read re-expressed on
-    * this plain-parquet MOR layout. Only quad identities WRITTEN inside
-    * the window can differ between the two snapshots, so the plan is
-    * O(window): the window's distinct touched identities BROADCAST into
-    * a semi-join that prunes the store's history to those keys in one
-    * map-side pass (no corpus shuffle, no full-snapshot
-    * materialization), then the two latest-wins endpoint states are
-    * compared by presence. Changes are quad-granular set-semantics
-    * deltas: a value update surfaces as the new identity's `insert`
-    * (plus the old identity's `delete` iff it was tombstoned) — exactly
-    * the semantics the store keeps, and what an incremental-maintenance
-    * consumer downstream wants to replay. Re-inserting an already-live
-    * quad or re-tombstoning a dead one inside the window nets to NO
-    * change row. `fromBatch` must be at or past the compaction horizon
-    * (the baseline state must still be reconstructible — same retention
-    * trade as [[readAsOf]]). */
-  def changesBetween(fromBatch: Long, toBatch: Long): DataFrame = {
-    require(fromBatch >= 0 && toBatch >= fromBatch,
-      s"bad CDF window [$fromBatch, $toBatch]: need 0 <= from <= to")
-    val h = compactionHorizon()
-    require(h.forall(fromBatch >= _),
-      s"CDF baseline batch $fromBatch is unreachable: compaction folded " +
-        s"history up to batch ${h.get} into the base (retention trade)")
-    val keys = schema.fieldNames.toIndexedSeq
-    val deltas = readDeltas()
-    val touched = deltas
-      .filter(col("batch_id") > fromBatch && col("batch_id") <= toBatch)
-      .select(keys.map(col): _*).distinct()
-    val d = deltas.alias("cdf_d")
-    val t = broadcast(touched).alias("cdf_k")
-    // Null-safe semi-join: o_type/o_lang are null for IRIs and plain
-    // literals (the dominant shapes) — see readMerged's anti-join note.
-    val cond = keys.map(k => col(s"cdf_d.$k") <=> col(s"cdf_k.$k"))
-      .reduce(_ && _)
-    val history = d.join(t, cond, "left_semi")
-    def stateAt(asOf: Long, side: Int) = history
-      .filter(col("batch_id") <= asOf
-        || col("batch_id") === MergeOnReadStore.CompactedBatchId)
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(col("op"), col("batch_id")).as("last_op"))
-      .filter(col("last_op") === "i")
-      .select(keys.map(col): _*)
-      .withColumn("cdf_side", lit(side))
-    // groupBy treats nulls as equal, so presence flags need no <=> here
-    stateAt(fromBatch, 0).unionByName(stateAt(toBatch, 1))
-      .groupBy(keys.map(col): _*)
-      .agg(max(when(col("cdf_side") === 0, 1).otherwise(0)).as("cdf_b"),
-        max(when(col("cdf_side") === 1, 1).otherwise(0)).as("cdf_a"))
-      .filter(col("cdf_b") =!= col("cdf_a"))
-      .withColumn("change",
-        when(col("cdf_a") === 1, lit("insert")).otherwise(lit("delete")))
-      .select(keys.map(col) :+ col("change"): _*)
-  }
-
-  // ---- QuadStore surface: the engine's set-semantics ops re-expressed
-  // as O(delta) writes (insert deltas / tombstones); the latest-wins
-  // read supplies the dedup appendDistinct does eagerly.
-  def read(): DataFrame = readMerged()
-
-  def appendDistinct(quads: DataFrame,
-      knownGraphs: Option[Seq[String]] = None): Unit =
-    appendDelta(quads, nextBatchId())
-
-  def insertData(quads: Seq[Quad]): Unit = {
-    import spark.implicits._
-    appendDistinct(quads.toDF())
-  }
-
-  /** DELETE as tombstones — O(delta), no partition rewrite. */
-  def deleteQuads(quads: DataFrame,
-      knownGraphs: Option[Seq[String]] = None): Unit =
-    appendDelta(quads, nextBatchId(), op = "d")
-
-  def deleteData(quads: Seq[Quad]): Unit = {
-    import spark.implicits._
-    deleteQuads(quads.toDF())
-  }
-
-  /** CLEAR/DROP stay physical: every delta of the graph lives in its
-    * partition directory, so deleting it empties the merged view too. */
-  def clearGraph(graph: String): Unit = {
-    val dir = new Path(path,
-      "graph=" + ExternalCatalogUtils.escapePathName(graph))
-    if (fs.exists(dir)) fs.delete(dir, true)
-  }
-
-  def dropGraph(graph: String): Unit = clearGraph(graph)
-
-  /** Partition-directory list (may include fully-tombstoned graphs —
-    * clearing those is a harmless no-op for ALL/NAMED). */
-  def graphNames(): Seq[String] =
-    if (!fs.exists(new Path(path))) Seq.empty
-    else fs.listStatus(new Path(path)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("graph="))
-      .map(st => ExternalCatalogUtils.unescapePathName(
-        st.getPath.getName.stripPrefix("graph=")))
-
-  /** Collapse one graph partition: rewrite its merged view as the
-    * reserved compacted pseudo-batch (distinct inserts, no history) and
-    * drop the masked deltas. Post-compaction reads skip the latest-wins
-    * aggregation for these rows — see [[readMerged]]. */
-  /** Auto-compaction policy: fold when the post-compaction delta TAIL of
-    * `graph` exceeds `maxTailBatches` distinct batches. The tail is what
-    * every [[readMerged]] must aggregate and anti-join, so at 100 TB the
-    * tail length IS the read cost — a bounded-tail policy keeps read
-    * amplification O(maxTailBatches) regardless of ingest history. The
-    * trigger itself is a batch_id-only distinct over one graph partition
-    * (column-stats cheap). Returns true when a compaction ran. */
-  def compactIfNeeded(graph: String, maxTailBatches: Int = 8,
-      numFiles: Int = 1): Boolean = {
-    val tailBatches = readDeltas().where(col("graph") === graph)
-      .filter(col("batch_id") =!= MergeOnReadStore.CompactedBatchId)
-      .select(col("batch_id")).distinct().count()
-    if (tailBatches > maxTailBatches) { compact(graph, numFiles); true }
-    else false
-  }
-
-  def compact(graph: String, numFiles: Int = 1): Unit = {
-    // Capture how far history is being folded: max real batch id among
-    // this graph's deltas = the oldest snapshot that stays reachable
-    // afterwards (readAsOf rejects anything older). A batch_id-only
-    // aggregation — parquet column stats, no row work. The horizon is
-    // PERSISTED BEFORE the partition swap: readMerged's never-compacted
-    // fast path relies on "no `_compaction` marker implies no compacted
-    // base rows", so the marker must exist by the time base rows can.
-    // A crash between the two steps leaves the conservative state —
-    // readAsOf rejects pre-horizon snapshots whose deltas are in fact
-    // still all present, and readMerged takes the (correct) split path
-    // over an empty base.
-    val maxBatch = readDeltas().where(col("graph") === graph)
-      .filter(col("batch_id") =!= MergeOnReadStore.CompactedBatchId)
-      .agg(max(col("batch_id"))).collect().head
-    val merged = readGraphs(Seq(graph)).coalesce(numFiles)
-      .withColumn("batch_id", lit(MergeOnReadStore.CompactedBatchId))
-      .withColumn("op", lit("i"))
-    val tmp = new Path(path + s".compact-${System.nanoTime()}")
-    merged.write.partitionBy("graph").parquet(tmp.toString)
-    if (!maxBatch.isNullAt(0)) writeHorizon(graph, maxBatch.getLong(0))
-    val part = "graph=" + ExternalCatalogUtils.escapePathName(graph)
-    val dst = new Path(path, part)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    val src = new Path(tmp, part)
-    if (fs.exists(src)) fs.rename(src, dst)
-    fs.delete(tmp, true)
-  }
+    extends StringTerms with MergeOnRead {
+  /** The latest-wins set-semantics view (= [[read]]). */
+  def readMerged(): DataFrame = readEncoded()
 }
 
-/** Read-only SPARQL surface over a merge-on-read SNAPSHOT: the engine
-  * queries history exactly like the live state (`GraphEngine(new
-  * SnapshotStore(store, v))`), with the batch filter pushed into the
-  * delta scan — no per-version copy. Mutations are rejected loudly:
-  * rewriting history is a different feature (branching), not an
-  * accidental write path.
-  */
-final class SnapshotStore(underlying: MergeOnReadStore, asOf: Long)
-    extends QuadStore {
-  def spark: SparkSession = underlying.spark
-  def path: String = underlying.path
-  def read(): DataFrame = underlying.readAsOf(asOf)
-  def readGraphs(graphs: Seq[String]): DataFrame =
-    read().where(col("graph").isin(graphs: _*))
-  def graphNames(): Seq[String] = underlying.graphNames()
-  private def readOnly = throw new UnsupportedOperationException(
-    s"snapshot as-of batch $asOf is read-only")
-  def appendDistinct(quads: DataFrame, knownGraphs: Option[Seq[String]]): Unit = readOnly
-  def insertData(quads: Seq[Quad]): Unit = readOnly
-  def deleteQuads(quads: DataFrame, knownGraphs: Option[Seq[String]]): Unit = readOnly
-  def deleteData(quads: Seq[Quad]): Unit = readOnly
-  def clearGraph(graph: String): Unit = readOnly
-  def dropGraph(graph: String): Unit = readOnly
-  def compact(graph: String, numFiles: Int): Unit = readOnly
-}
+/** Read-only SPARQL surface over a string merge-on-read snapshot — see
+  * [[ReadOnlySnapshot]]. */
+final class SnapshotStore(protected val underlying: MergeOnReadStore,
+    protected val asOf: Long) extends StringTerms with ReadOnlySnapshot
 
 object MergeOnReadStore {
   /** Reserved batch id marking compacted (already-merged, insert-only,

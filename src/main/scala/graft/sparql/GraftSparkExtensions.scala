@@ -20,12 +20,19 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * registration or closure shipping involved.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("encode_for_uri"),
-      new ExpressionInfo(classOf[EncodeForUriExpr].getName, "encode_for_uri"),
-      (exprs: Seq[Expression]) => EncodeForUriExpr(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => DotProductExpr(exprs(0), exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftSparkExtensions.functions.foreach(ext.injectFunction)
+}
+
+object GraftSparkExtensions {
+  /** Every native expression callable from SQL text: the one list both
+    * this extension and `GraftShim.registerFunctions` register. The
+    * descriptions are built once, so registering them again on a live
+    * session replaces each entry with an identical one (idempotent). */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    native("encode_for_uri", classOf[EncodeForUriExpr])(e => EncodeForUriExpr(e.head)),
+    native("vec_dot", classOf[DotProductExpr])(e => DotProductExpr(e(0), e(1))))
+
+  private def native(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 }

@@ -34,13 +34,13 @@ object GraftShim {
   def scalarSubquery(df: Dataset[_]): Column =
     column(ScalarSubquery(df.queryExecution.analyzed))
 
-  /** Register graft's native expressions in the session function
-    * registry so they are callable from `spark.sql` text. */
+  /** Register graft's native expressions
+    * ([[graft.sparql.GraftSparkExtensions.functions]]) in the session
+    * function registry so they are callable from `spark.sql` text. */
   def registerFunctions(spark: SparkSession): Unit = {
     val reg = spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("encode_for_uri",
-      exprs => graft.sparql.EncodeForUriExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("vec_dot",
-      exprs => graft.sparql.DotProductExpr(exprs(0), exprs(1)), "built-in")
+    graft.sparql.GraftSparkExtensions.functions.foreach { case (id, info, build) =>
+      reg.registerFunction(id, info, build)
+    }
   }
 }
